@@ -17,6 +17,9 @@ Semantics notes:
   rename window, same as every Hadoop-rename-based committer.
 - sidecar files (``_MANIFEST``) are written via create(overwrite)
   then read back whole; they are tiny (a JSON list of dir names).
+- this is the ONLY module that talks to the Hadoop FileSystem API;
+  index and warehouse modules list, lock, rename and probe their files
+  through the functions below (a repo test enforces it).
 - every operation takes a LOCAL fast path when the resolved scheme is
   the driver's local filesystem: one py4j Hadoop-FS round trip costs
   ~2.8 ms (measured r15) against ~2.5 µs for the ``os`` equivalent,
@@ -32,7 +35,11 @@ from __future__ import annotations
 import json
 import os as _os
 import shutil as _shutil
+from contextlib import contextmanager
 from urllib.parse import urlparse as _urlparse
+
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 
 # fs.defaultFS per JVM gateway (one py4j read, then cached): decides
 # whether a scheme-less path is the driver-local filesystem.
@@ -59,8 +66,8 @@ def _local_path(spark, path: str) -> str | None:
 
 
 def hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for ``path`` — the same helper shape the
-    index modules use (operators/similarity.py:_hadoop_fs)."""
+    """(FileSystem, Path) for ``path`` — the Hadoop branch of every
+    function below."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
@@ -112,7 +119,9 @@ def rename(spark, src: str, dst: str) -> None:
 
     ``FileSystem.rename`` reports most failures (dst exists, parent
     missing, S3A copy+delete partial failure) by returning ``false``
-    rather than raising — unlike the ``os.rename`` it replaces here.
+    rather than raising — unlike the ``os.rename`` it replaces here —
+    and others (a missing source on the local FileSystem) by throwing;
+    both surface as ``OSError``, like ``os.rename``.
     Every caller in this repo treats the rename as the commit point of
     a staged-write protocol, where a silently-skipped rename followed
     by source cleanup is unrecoverable data loss, so a ``False`` result
@@ -133,8 +142,74 @@ def rename(spark, src: str, dst: str) -> None:
         return
     fs, s = hadoop_fs(spark, src)
     _, d = hadoop_fs(spark, dst)
-    if not bool(fs.rename(s, d)):
+    try:
+        ok = bool(fs.rename(s, d))
+    except Py4JJavaError as e:
+        raise IOError(f"rename failed: {src} -> {dst}") from e
+    if not ok:
         raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def create_exclusive(spark, path: str) -> bool:
+    """Create an empty file at ``path`` (and its parent directories)
+    only if nothing exists there; True iff THIS call created it.
+
+    Exactly one of any number of racing callers wins: locally through
+    ``O_CREAT|O_EXCL`` (one atomic kernel call), on Hadoop through
+    ``create(path, overwrite=False)``, whose existence check is atomic
+    on HDFS and whose ``FileAlreadyExistsException`` becomes False
+    here. (``FileSystem.createNewFile`` is NOT a substitute: it checks
+    then creates, so two callers can both see "absent", and a loser of
+    the create can surface a raw JVM exception.) Hadoop's own
+    ``LocalFileSystem`` also checks then creates — local paths never
+    take that branch."""
+    lp = _local_path(spark, path)
+    if lp is not None:
+        _os.makedirs(_os.path.dirname(lp), exist_ok=True)
+        try:
+            _os.close(_os.open(lp, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY))
+        except FileExistsError:
+            return False
+        return True
+    fs, p = hadoop_fs(spark, path)
+    try:
+        fs.create(p, False).close()
+    except Py4JJavaError as e:
+        if is_instance_of(
+            spark.sparkContext._gateway,
+            e.java_exception,
+            "org.apache.hadoop.fs.FileAlreadyExistsException",
+        ):
+            return False
+        raise
+    return True
+
+
+LOCK_FILE = "_index.lock"
+
+
+@contextmanager
+def index_lock(spark, index_path: str, what: str):
+    """Hold the index's mutator lock for the ``with`` body: mutual
+    exclusion between every fold, append, delete and compaction of one
+    persisted index, through a :func:`create_exclusive` marker. Folds
+    must be serialized (two concurrent folds would each miss the
+    other's documents as history — silent missed pairs), and a
+    compaction racing a fold could delete subdirectories mid-read; with
+    the lock, either race fails LOUDLY. A crash can leave the marker
+    behind — the error names the path so an operator can remove a
+    stale lock deliberately, never accidentally."""
+    lock = join(index_path, LOCK_FILE)
+    if not create_exclusive(spark, lock):
+        raise RuntimeError(
+            f"index at {index_path} is locked by a concurrent fold or "
+            f"compaction ({what} refused). If the previous operation crashed, "
+            f"remove the stale marker {lock} and retry."
+        )
+    try:
+        yield
+    finally:
+        delete(spark, lock)
 
 
 def child_entries(spark, path: str) -> list[tuple[str, bool]]:

@@ -77,7 +77,6 @@ from py_data_pipeline_app_spark.operators.similarity import (
     _bucket_layout,
     _centroid_rows,
     _centroid_rows_df,
-    _hadoop_fs,
     _ivf_centroid_checksum,
     _md5_sample_centroids,
     _query_probes,
@@ -624,8 +623,7 @@ def build_ivfpq_index(
     callers should prefer :func:`build_ivfpq_index_trained`, which
     derives both tables correctly in one call."""
     spark = corpus.sparkSession
-    fs, appends_path = _hadoop_fs(spark, f"{index_path}/{IVFPQ_APPENDS_SUBDIR}")
-    if fs.exists(appends_path):
+    if fsio.exists(spark, f"{index_path}/{IVFPQ_APPENDS_SUBDIR}"):
         raise ValueError(
             f"IVF-PQ index at {index_path} has appended batches; rebuilding "
             "the base would orphan their assignments and codes (the reader "
@@ -636,8 +634,7 @@ def build_ivfpq_index(
         IVF_DELETES_SUBDIR,
     )
 
-    _, dels_path = _hadoop_fs(spark, f"{index_path}/{IVF_DELETES_SUBDIR}")
-    if fs.exists(dels_path):
+    if fsio.exists(spark, f"{index_path}/{IVF_DELETES_SUBDIR}"):
         raise ValueError(
             f"IVF-PQ index at {index_path} has pending tombstones; rebuilding "
             "the base would leave them filtering the NEW corpus's ids. "
@@ -1225,13 +1222,8 @@ def ivfpq_index_append(
     drifted codebooks make ADC scores meaningless. Appending a vec_id
     already in the index is unsupported (the reader unions). Returns
     the batch token. Serialized against other mutators by the shared
-    atomic lock marker."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
-
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "IVF-PQ append")
-    try:
+    index lock."""
+    with fsio.index_lock(spark, index_path, "IVF-PQ append"):
         return _ivfpq_index_append_locked(
             spark,
             index_path,
@@ -1240,8 +1232,6 @@ def ivfpq_index_append(
             vec_col=vec_col,
             batch_token=batch_token,
         )
-    finally:
-        lock_fs.delete(lock, False)
 
 
 def _ivfpq_index_append_locked(
@@ -1321,17 +1311,11 @@ def ivfpq_index_compact(spark, index_path: str, *, keep_newest: bool = False) ->
     layouts differ only in what a row holds); serialized against
     appends by the shared lock. Returns the number of directories
     merged."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
     from py_data_pipeline_app_spark.operators.similarity import (
         _compact_assigned_locked,
     )
 
-    lock_fs, lock = _acquire_index_lock(spark, index_path, "IVF-PQ compaction")
-    try:
+    with fsio.index_lock(spark, index_path, "IVF-PQ compaction"):
         return _compact_assigned_locked(
             spark, index_path, IVFPQ_APPENDS_SUBDIR, keep_newest
         )
-    finally:
-        lock_fs.delete(lock, False)

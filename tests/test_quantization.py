@@ -454,9 +454,7 @@ def test_pq_encode_plan_is_zero_shuffle(emb, cb):
 def test_index_mutators_respect_lock(spark, emb, tmp_path):
     """A held index lock must make appends and compactions fail loudly
     (the LSH index's serialization contract, now shared by IVF/IVF-PQ)."""
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
+    from py_data_pipeline_app_spark import fsio
     from py_data_pipeline_app_spark.operators.quantization import (
         build_ivfpq_index,
         ivfpq_index_append,
@@ -472,23 +470,17 @@ def test_index_mutators_respect_lock(spark, emb, tmp_path):
 
     ivf = str(tmp_path / "ivf")
     build_ivf_index(half, ivf, n_centroids=8)
-    fs, lock = _acquire_index_lock(spark, ivf, "test")
-    try:
+    with fsio.index_lock(spark, ivf, "test"):
         with pytest.raises(RuntimeError, match="locked"):
             ivf_index_append(spark, ivf, rest, batch_token="x")
         with pytest.raises(RuntimeError, match="locked"):
             ivf_index_compact(spark, ivf)
-    finally:
-        fs.delete(lock, False)
 
     pq = str(tmp_path / "pq")
     build_ivfpq_index(half, pq, n_centroids=8, m=M, ksub=8, dim=DIM)
-    fs, lock = _acquire_index_lock(spark, pq, "test")
-    try:
+    with fsio.index_lock(spark, pq, "test"):
         with pytest.raises(RuntimeError, match="locked"):
             ivfpq_index_append(spark, pq, rest, batch_token="x")
-    finally:
-        fs.delete(lock, False)
 
 
 @pytest.mark.oracle

@@ -285,10 +285,10 @@ def test_reorder_leaves_untouched_clusters_unrewritten(spark, emb, tmp_path):
     """Partition pruning is the scale contract: a cluster receiving no
     batch rows keeps its exact files (same names, same mtimes) through
     a reorder append."""
+    from py_data_pipeline_app_spark import fsio
     from py_data_pipeline_app_spark.operators.similarity import (
         _assign_to_centroids,
         _centroid_rows,
-        _hadoop_fs,
     )
 
     idx = _fresh(tmp_path, "reorder-prune")
@@ -309,11 +309,11 @@ def test_reorder_leaves_untouched_clusters_unrewritten(spark, emb, tmp_path):
     assert untouched, "fixture batch must leave some cluster untouched"
 
     def listing(c):
-        fs, p = _hadoop_fs(spark, f"{idx}/assigned/centroid_id={c}")
-        return sorted(
-            (s.getPath().getName(), s.getModificationTime())
-            for s in fs.listStatus(p)
-        )
+        p = f"{idx}/assigned/centroid_id={c}"
+        return [
+            (name, fsio.mtime_ms(spark, fsio.join(p, name)))
+            for name in fsio.child_names(spark, p)
+        ]
 
     before = {c: listing(c) for c in untouched}
     semantic_index_append(
@@ -498,7 +498,6 @@ def test_reorder_with_pending_appends_is_bounded(spark, emb, tmp_path):
         SEMANTIC_REORDER_EXCL_SUBDIR,
         _assign_to_centroids,
         _centroid_rows,
-        _hadoop_fs,
         semantic_index_compact,
     )
 
@@ -526,18 +525,18 @@ def test_reorder_with_pending_appends_is_bounded(spark, emb, tmp_path):
     assert untouched, "fixture batch must leave some cluster untouched"
 
     def listing(c):
-        fs, p = _hadoop_fs(spark, f"{idx}/assigned/centroid_id={c}")
-        return sorted(
-            (s.getPath().getName(), s.getModificationTime())
-            for s in fs.listStatus(p)
-        )
+        p = f"{idx}/assigned/centroid_id={c}"
+        return [
+            (name, fsio.mtime_ms(spark, fsio.join(p, name)))
+            for name in fsio.child_names(spark, p)
+        ]
 
     def append_listing(tok):
-        fs, p = _hadoop_fs(spark, f"{idx}/appends/batch-{tok}")
-        return sorted(
-            (s.getPath().toString(), s.getModificationTime())
-            for s in fs.listStatus(p)
-        )
+        p = f"{idx}/appends/batch-{tok}"
+        return [
+            (fsio.join(p, name), fsio.mtime_ms(spark, fsio.join(p, name)))
+            for name in fsio.child_names(spark, p)
+        ]
 
     base_before = {c: listing(c) for c in untouched}
     appends_before = {t: append_listing(t) for t in ("a1", "a2")}

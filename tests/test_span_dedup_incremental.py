@@ -87,19 +87,14 @@ def test_config_drift_fails_loudly(spark, corpus, tmp_path):
 
 
 def test_lock_excludes_concurrent_fold(spark, corpus, tmp_path):
-    from py_data_pipeline_app_spark.operators.dedup_incremental import (
-        _acquire_index_lock,
-    )
+    from py_data_pipeline_app_spark import fsio
 
     index = str(tmp_path / "idx")
-    fs, lock = _acquire_index_lock(spark, index, "test holds lock")
-    try:
+    with fsio.index_lock(spark, index, "test holds lock"):
         with pytest.raises(RuntimeError, match="locked"):
             incremental_span_fold(
                 spark, index, corpus.filter(F.col("doc_id") < 10), batch_token="x"
             )
-    finally:
-        fs.delete(lock, False)
 
 
 @pytest.mark.oracle
